@@ -700,6 +700,10 @@ def hll_distinct_terms(
     adds the exact count(DISTINCT) comparison column (the expensive path
     the sketch replaces) — keep it for audits, drop it in production.
     """
+    if m not in (16, 32, 64, 128, 256):
+        # registers come from the md5's first byte (at most 256, split
+        # evenly only by a power of two); alpha_m is defined from m = 16
+        raise ValueError(f"hll_distinct_terms needs m in 16/32/64/128/256, got {m}")
     hexd = "0123456789abcdef"
     tok = docs.select(
         F.col(group_col).alias("grp"),
@@ -724,7 +728,7 @@ def hll_distinct_terms(
         ).alias("rho"),
     )
     regs = tok.groupBy("grp", "reg").agg(F.max("rho").alias("mx"))
-    alpha = 0.709  # alpha_64; callers changing m supply the matching alpha
+    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1 + 1.079 / m))
     per = regs.groupBy("grp").agg(
         F.sum(F.pow(F.lit(2.0), -F.col("mx"))).alias("sumexp"),
         F.count(F.lit(1)).alias("n_regs"),

@@ -73,7 +73,13 @@ from pyspark.sql import types as T
 
 from ..functions import codec
 from ..functions.hashing import py_block_ids
-from .query import boost_multiplier
+from .rescore import (
+    Ceiling,
+    Rescorer,
+    boost_rescorer,
+    bounded_topk,
+    proximity_rescorer,
+)
 
 SCORED_SCHEMA = T.StructType(
     [
@@ -491,118 +497,24 @@ def wand_proximity(
     (`PosdbTable.cpp:3404-3620`; pair formula `:744-810`, ~1/(dist+1)).
     Our exact path (SearchEngine.search_proximity) pivots positions for the
     whole match set, which at 10^12-turn scale means shuffling every
-    posting of a common term. The scale shape instead:
-
-      1. over-fetch m = overfetch*k candidates by pure BM25 via block-max
-         WAND (bounded, pruned work — the existing two-phase/fast paths);
-      2. rescore ONLY those m docs with the shared one-pass pair kernel
-         (SearchEngine.position_bonus with a broadcast doc restrict — the
-         pivot shuffles m docs' positions, not the corpus);
-      3. re-rank by bm25 + prox_weight * bonus, return top k.
-
-    EXACT, not approximate: the bonus is bounded — each of the
-    C(n_terms, 2) pairs contributes at most 1/(min_dist+1) <= 1, so
-    W = prox_weight * n_pairs caps what rescoring can add. Any doc OUTSIDE
-    the candidate set has BM25 <= the m-th candidate's BM25 (WAND returns
-    the true BM25 top-m), hence rescored score <= that + W. If the k-th
-    rescored score clears that ceiling, the top k is provably final;
-    otherwise m grows 4x (up to ``max_candidates``, then the exact path
-    takes over — a pathological corpus where BM25 order is this flat is
-    exactly where rescoring everything is the right call). When WAND
-    returns fewer than m rows the candidate set is the ENTIRE match set
-    and one pass is trivially exact.
+    posting of a common term. Here the certified rescoring loop
+    (rescore.bounded_topk) over-fetches the BM25 top-m by block-max WAND
+    and rescores only those m docs with the pair kernel; its bonus ceiling
+    W = prox_weight * C(n_terms, 2) makes the re-ranked top k provably
+    exact, and at ``max_candidates`` the exact path takes over (with the
+    caller's ``exclude_terms``).
 
     prox_weight=0 (or a <2-term query) is wand_search verbatim —
     rank-identity gated in tests/test_wand_proximity.py."""
-    spark = engine.spark
-    empty = spark.createDataFrame([], "doc_id long, score double, matched int")
-    plan = engine.plan_terms(query_terms)
-    n_q = len(set(query_terms))
-    if plan.empty or len(plan) < n_q:
-        return empty
-    terms = sorted(plan["term"])
-    if prox_weight == 0.0 or len(terms) < 2:
+    if prox_weight == 0.0 or len(set(query_terms)) < 2:
         return wand_search(engine, query_terms, "AND", k, **wand_kwargs)
-    engine._require_positions("the proximity boost")
-    tid_of = dict(zip(plan["term"], plan["term_id"]))
-    n_pairs = len(terms) * (len(terms) - 1) // 2
-    ceiling = float(prox_weight) * n_pairs
-    m = max(k * overfetch, k + 1)
-    # Exhaustive-candidate fast path: under AND the match set is bounded
-    # by the rarest term's df, already in the plan (no extra job). When
-    # that bound is affordable, fetch the WHOLE match set in one pass --
-    # the candidate set is exhaustive so a single rescore is trivially
-    # exact, skipping every certificate/escalation iteration. Never worse
-    # than the loop's own worst case: its fallback (search_proximity)
-    # pivots positions for the same <= rarest_df match set anyway, after
-    # having paid log_4(max_candidates/m) wand passes to get there.
-    rarest_df = int(plan["df"].min())
-    if rarest_df < max_candidates:
-        m = max(m, rarest_df + 1)
-    while True:
-        cands = wand_search(engine, query_terms, "AND", m, **wand_kwargs)
-        cand_rows = cands.collect()  # <= m rows (wand's own contract)
-        if not cand_rows:
-            return empty
-        exhausted = len(cand_rows) < m
-        cand_df = spark.createDataFrame(cand_rows, cands.schema)
-        bonus = engine.position_bonus(terms, tid_of, restrict=cand_df)
-        rescored = cand_df.join(bonus, "doc_id", "left_outer").select(
-            "doc_id",
-            (
-                F.col("score")
-                + F.lit(float(prox_weight))
-                * F.coalesce(F.col("_bonus"), F.lit(0.0))
-            ).alias("score"),
-            "matched",
-        )
-        top = rescored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        rows = top.collect()
-        if exhausted:
-            break
-        kth = rows[k - 1]["score"] if len(rows) >= k else float("-inf")
-        weakest_bm25 = min(r["score"] for r in cand_rows)
-        if kth >= weakest_bm25 + ceiling:
-            break
-        if m >= max_candidates:
-            # the exact path must honor the same exclusions the WAND
-            # passes applied, or the terminal branch silently returns
-            # docs the caller excluded (the other wand_kwargs are WAND
-            # performance knobs with no meaning on the exact path)
-            return engine.search_proximity(
-                query_terms,
-                k=k,
-                prox_weight=prox_weight,
-                exclude_terms=wand_kwargs.get("exclude_terms"),
-            )
-        # Escalation schedule (performance only -- exactness never depends
-        # on it): the certificate needs weakest_bm25(m') <= kth - ceiling.
-        # BM25 scores decay monotonically with rank, so extrapolate the
-        # observed tail slope to the rank where the threshold is reached;
-        # when even max_candidates cannot plausibly get there, skip the
-        # intermediate WAND passes and take the exact path NOW (it is the
-        # loop's terminal state anyway). A flat observed tail (ties) is
-        # hopeless by definition.
-        s_star = kth - ceiling
-        scores = [r["score"] for r in cand_rows]  # BM25, desc (wand order)
-        tail = scores[len(scores) // 2 :]
-        slope = (tail[0] - tail[-1]) / max(1, len(tail) - 1)
-        if slope > 0:
-            m_needed = m + int((scores[-1] - s_star) / slope) + 1
-        else:
-            m_needed = max_candidates + 1
-        if m_needed > max_candidates:
-            # same exclusion forwarding as the m >= max_candidates branch
-            return engine.search_proximity(
-                query_terms,
-                k=k,
-                prox_weight=prox_weight,
-                exclude_terms=wand_kwargs.get("exclude_terms"),
-            )
-        m = min(max(m * 4, int(m_needed * 1.25)), max_candidates)
-    return (
-        spark.createDataFrame(rows, top.schema) if rows else empty
+    rescorer = proximity_rescorer(
+        engine, prox_weight, wand_kwargs.get("exclude_terms")
     )
+    query = {"query_id": "", "terms": query_terms, "k": k}
+    return bounded_topk(
+        engine, [query], rescorer, max_candidates, overfetch, wand_kwargs
+    ).select("doc_id", "score", "matched")
 
 
 def wand_phrase(
@@ -621,26 +533,14 @@ def wand_phrase(
     common bigram's termlist is itself huge. The reference serves quoted
     phrases through the same top-k candidate machinery as plain queries and
     position-verifies candidates (`Query.h:219-226`, `Matches.cpp:252`,
-    `PosdbTable.cpp` candidate loop); this is that shape on Spark:
-
-      1. over-fetch the true BM25 top-m (m = overfetch*k) of the phrase's
-         DISTINCT terms in AND mode via block-max WAND — phrase docs are a
-         subset of the AND match set, and search_phrase's scoring IS the
-         plain BM25 sum over those distinct terms;
-      2. position-verify ONLY those m candidates (phrase_docs with a
-         broadcast ``restrict`` — candidate positions shuffle, not the
-         corpus), served from indexed bigram termlists when present;
-      3. the survivors, re-ranked, are the answer iff provably final.
-
-    EXACT, not approximate: WAND returns the true BM25 top-m under the
-    total order (score DESC, doc_id ASC), so every phrase doc OUTSIDE the
-    candidate set orders strictly after the m-th candidate. If the k-th
-    surviving score >= the weakest candidate score the page is final
-    (survivors are candidates, so at equality the survivor still precedes
-    every outside doc); otherwise m escalates by the same tail-slope
-    schedule wand_proximity uses, and at ``max_candidates`` the exact path
-    takes over. When WAND returns fewer than m rows the candidate set IS
-    the whole AND match set and one verify pass is trivially exact.
+    `PosdbTable.cpp` candidate loop). Here the certified rescoring loop
+    (rescore.bounded_topk) over-fetches the BM25 top-m of the phrase's
+    DISTINCT terms in AND mode — phrase docs are a subset of that match
+    set, and search_phrase's score IS their plain BM25 sum — and keeps the
+    candidates that pass position verification (phrase_docs with a
+    broadcast ``restrict``, from bigram termlists when indexed). Survivors
+    keep their BM25 (ceiling W = 0, ties certify); at ``max_candidates``
+    search_phrase takes over.
 
     Single-word "phrases" are plain top-k: wand_search verbatim.
     Rank/score-identity vs search_phrase is gated in
@@ -653,68 +553,24 @@ def wand_phrase(
             "wand_phrase does not support exclude_terms; filter the "
             "result or use search_query's grammar"
         )
-    spark = engine.spark
-    empty = spark.createDataFrame([], "doc_id long, score double, matched int")
-    n = len(phrase_terms)
-    if n == 0:
-        return empty
-    if n == 1:
+    if len(phrase_terms) < 2:
         return wand_search(engine, phrase_terms, "AND", k, **wand_kwargs)
-    uniq = sorted(set(phrase_terms))
-    plan = engine.plan_terms(uniq)
-    if plan.empty or len(plan) < len(uniq):
-        return empty
     engine._require_positions("the phrase path")
-    m = max(k * overfetch, k + 1)
-    # Exhaustive-candidate fast path: the AND match set is bounded by the
-    # rarest term's df (already in the plan — no extra job); when that is
-    # affordable, fetch the WHOLE match set once and a single verify pass
-    # is trivially exact, skipping every certificate iteration.
-    rarest_df = int(plan["df"].min())
-    if rarest_df < max_candidates:
-        m = max(m, rarest_df + 1)
-    while True:
-        cands = wand_search(engine, uniq, "AND", m, **wand_kwargs)
-        cand_rows = cands.collect()  # <= m rows (wand's own contract)
-        if not cand_rows:
-            return empty
-        exhausted = len(cand_rows) < m
-        cand_df = spark.createDataFrame(cand_rows, cands.schema)
-        hits = engine._phrase_hits(phrase_terms, use_bigrams, restrict=cand_df)
-        top = (
-            cand_df.join(hits, "doc_id", "left_semi")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+
+    def verify(cands: DataFrame, queries) -> DataFrame:
+        hits = engine._phrase_hits(phrase_terms, use_bigrams, restrict=cands)
+        return cands.join(hits, "doc_id", "left_semi").withColumn(
+            "score", F.col("bm25")
         )
-        rows = top.collect()
-        if exhausted:
-            break
-        kth = rows[k - 1]["score"] if len(rows) >= k else float("-inf")
-        weakest_bm25 = min(r["score"] for r in cand_rows)
-        if kth >= weakest_bm25:
-            break
-        if m >= max_candidates:
-            return engine.search_phrase(
-                phrase_terms, k=k, use_bigrams=use_bigrams
-            )
-        # Escalation schedule (performance only — exactness never depends
-        # on it): the certificate needs weakest_bm25(m') <= kth; BM25
-        # decays monotonically with rank, so extrapolate the observed tail
-        # slope to the rank reaching kth (same schedule as wand_proximity
-        # with a zero bonus ceiling). A flat tail is hopeless by definition.
-        scores = [r["score"] for r in cand_rows]  # BM25 desc (wand order)
-        tail = scores[len(scores) // 2 :]
-        slope = (tail[0] - tail[-1]) / max(1, len(tail) - 1)
-        if slope > 0 and kth > float("-inf"):
-            m_needed = m + int((scores[-1] - kth) / slope) + 1
-        else:
-            m_needed = max_candidates + 1
-        if m_needed > max_candidates:
-            return engine.search_phrase(
-                phrase_terms, k=k, use_bigrams=use_bigrams
-            )
-        m = min(max(m * 4, int(m_needed * 1.25)), max_candidates)
-    return spark.createDataFrame(rows, top.schema) if rows else empty
+
+    rescorer = Rescorer(
+        verify, lambda terms: Ceiling(1.0),
+        lambda q: engine.search_phrase(phrase_terms, k, use_bigrams),
+    )
+    query = {"query_id": "", "terms": phrase_terms, "k": k}
+    return bounded_topk(
+        engine, [query], rescorer, max_candidates, overfetch, wand_kwargs
+    ).select("doc_id", "score", "matched")
 
 
 def wand_boosted(
@@ -729,120 +585,29 @@ def wand_boosted(
     **wand_kwargs,
 ) -> DataFrame:
     """Doc-level score boosts on the WAND scale path (r5; companion to
-    wand_proximity, same over-fetch/certificate shape).
+    wand_proximity).
 
     The exact path (SearchEngine.search_boosted) joins the FULL candidate
     set to the doc store before top-k — at 10^12-turn scale a stopword-
     anchored query hash-joins billions of rows just to multiply most of
-    them by 1.0 and throw them away. The scale shape:
+    them by 1.0 and throw them away. Here the certified rescoring loop
+    (rescore.bounded_topk) over-fetches the BM25 top-m by block-max WAND
+    and joins ONLY those docs to the doc store pruned to the boost columns
+    (query.boost_multiplier — identical expression to the exact path). The
+    provable max multiplier M bounds every outside doc by its BM25 × M
+    (strict certificate); at ``max_candidates``, or when M <= 0, the exact
+    path takes over (with the caller's ``exclude_terms``).
 
-      1. over-fetch m = overfetch*k candidates by pure BM25 via block-max
-         WAND (bounded, pruned work);
-      2. join ONLY those m docs to the doc store pruned to the boost
-         columns (broadcast of m rows) and apply the shared multiplier
-         (query.boost_multiplier — identical expression to the exact path);
-      3. re-rank, return top k.
-
-    EXACT, not approximate: boost_multiplier also returns the provable max
-    multiplier M (per-column max over weight map + default, recency <= 1
-    because age clamps at 0). WAND returns the true BM25 top-m, so any doc
-    OUTSIDE the candidate set has BM25 <= the weakest candidate's, hence
-    boosted score <= weakest_bm25 * M. When the kth boosted score STRICTLY
-    clears that ceiling, the top k is provably final (strict: an outside
-    doc tied on BM25 with the weakest candidate and granted exactly M must
-    not leapfrog on the doc_id tie-break). Otherwise m escalates on the
-    observed BM25 tail slope (certificate needs weakest_bm25(m') < kth/M),
-    falling back to the exact path at max_candidates — same terminal
-    behavior as wand_proximity. BM25 scores are nonnegative (Lucene-style
-    idf, ln(x+1) > 0 — functions/bm25.py), so multiplying the certificate
-    through by M is sound.
-
-    Under AND the match set is bounded by the rarest term's df (already in
-    the plan): when affordable, fetch the whole match set once and the
-    single rescore is trivially exact (exhaustive fast path). No boosts
-    configured -> wand_search verbatim. Non-positive M (every weight and
-    the default <= 0) collapses all boosted scores; the certificate cannot
-    discriminate, so the exact path takes over immediately."""
-    field_weights = field_weights or {}
+    No boosts configured -> wand_search verbatim."""
     if not field_weights and recency is None:
         return wand_search(engine, query_terms, mode, k, **wand_kwargs)
-    spark = engine.spark
-    empty = spark.createDataFrame([], "doc_id long, score double, matched int")
-    plan = engine.plan_terms(query_terms)
-    n_q = len(set(query_terms))
-    if plan.empty or (mode == "AND" and len(plan) < n_q):
-        return empty
-    docs = engine.catalog.read_table("documents")
-    mult, need, max_mult = boost_multiplier(field_weights, recency)
-    for col in need:
-        if col not in docs.columns:
-            raise ValueError(
-                f"unknown boost column '{col}' -- boostable columns "
-                f"are the documents columns {sorted(docs.columns)}"
-            )
-
-    def exact():
-        return engine.search_boosted(
-            query_terms,
-            mode=mode,
-            k=k,
-            field_weights=field_weights,
-            recency=recency,
-            exclude_terms=wand_kwargs.get("exclude_terms"),
-        )
-
-    if max_mult <= 0.0:
-        return exact()
-    m = max(k * overfetch, k + 1)
-    if mode == "AND":
-        rarest_df = int(plan["df"].min())
-        if rarest_df < max_candidates:
-            m = max(m, rarest_df + 1)
-    pruned_docs = docs.select("doc_id", *need)
-    while True:
-        cands = wand_search(engine, query_terms, mode, m, **wand_kwargs)
-        cand_rows = cands.collect()  # <= m rows (wand's own contract)
-        if not cand_rows:
-            return empty
-        exhausted = len(cand_rows) < m
-        cand_df = spark.createDataFrame(cand_rows, cands.schema)
-        rescored = (
-            F.broadcast(cand_df)
-            .join(pruned_docs, "doc_id")
-            .select(
-                "doc_id",
-                (F.col("score") * mult).alias("score"),
-                "matched",
-            )
-        )
-        top = rescored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        rows = top.collect()
-        if exhausted:
-            break
-        kth = rows[k - 1]["score"] if len(rows) >= k else float("-inf")
-        weakest_bm25 = min(r["score"] for r in cand_rows)
-        if kth > weakest_bm25 * max_mult:
-            break
-        if m >= max_candidates:
-            return exact()
-        # escalation schedule (performance only, like wand_proximity):
-        # extrapolate the observed BM25 tail slope to the rank where
-        # weakest_bm25 * max_mult drops below the kth boosted score; a
-        # flat tail (ties) cannot get there by definition
-        s_star = kth / max_mult
-        scores = [r["score"] for r in cand_rows]  # BM25 desc (wand order)
-        tail = scores[len(scores) // 2 :]
-        slope = (tail[0] - tail[-1]) / max(1, len(tail) - 1)
-        if slope > 0:
-            m_needed = m + int((scores[-1] - s_star) / slope) + 1
-        else:
-            m_needed = max_candidates + 1
-        if m_needed > max_candidates:
-            return exact()
-        m = min(max(m * 4, int(m_needed * 1.25)), max_candidates)
-    return (
-        spark.createDataFrame(rows, top.schema) if rows else empty
+    rescorer = boost_rescorer(
+        engine, field_weights or {}, recency, wand_kwargs.get("exclude_terms")
     )
+    query = {"query_id": "", "terms": query_terms, "mode": mode, "k": k}
+    return bounded_topk(
+        engine, [query], rescorer, max_candidates, overfetch, wand_kwargs
+    ).select("doc_id", "score", "matched")
 
 
 def _apply_cursor(

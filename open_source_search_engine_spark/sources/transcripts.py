@@ -157,7 +157,9 @@ def generate_batch(gids: np.ndarray) -> pd.DataFrame:
     ts = BASE_TS + gids.astype("timedelta64[s]")
     return pd.DataFrame(
         {
-            "conv_id": np.char.add("conv-", np.char.zfill(conv.astype(str), 8)),
+            # %08d pads without truncating (np.char.zfill's output is
+            # exactly 8 wide, so conversation ids >= 1e8 would collide)
+            "conv_id": np.char.mod("conv-%08d", conv),
             "turn_idx": turn_idx,
             "role": role,
             "text": _texts_for_ids(gids),

@@ -100,8 +100,9 @@ def test_suffix_unmatched_under_and_is_empty(eng):
 
 
 # ---------------------------------------------------------------- hll ----
-def test_hll_estimate_within_sketch_error(spark):
-    # 64 registers -> relative error ~1.04/sqrt(64) = 13%; allow 3 sigma.
+@pytest.mark.parametrize("m", [16, 64, 256])
+def test_hll_estimate_within_sketch_error(spark, m):
+    # m registers -> relative error ~1.04/sqrt(m) (13% at 64); allow 3 sigma.
     # Vocabulary of ~200 distinct terms across two sources.
     rows = [
         (i, " ".join(f"w{(i * 7 + j) % 200}" for j in range(30)),
@@ -113,13 +114,25 @@ def test_hll_estimate_within_sketch_error(spark):
         hll_distinct_terms,
     )
 
-    out = hll_distinct_terms(docs).collect()
+    out = hll_distinct_terms(docs, m=m).collect()
     assert len(out) == 2
     for r in out:
         assert r["n_exact"] > 50
-        assert r["rel_err"] < 3 * 1.04 / (64 ** 0.5), (
+        assert r["rel_err"] < 3 * 1.04 / (m ** 0.5), (
             r["source"], r["hll_est"], r["n_exact"]
         )
+
+
+def test_hll_rejects_unsupported_register_count():
+    # registers come from the md5's first byte: m must be a power of two
+    # in 16..256, and alpha_m is only defined from 16
+    from open_source_search_engine_spark.operators.text_analysis import (
+        hll_distinct_terms,
+    )
+
+    for m in (8, 100, 512):
+        with pytest.raises(ValueError, match="16/32/64/128/256"):
+            hll_distinct_terms(None, m=m)
 
 
 def test_hll_registers_merge_across_slices(spark):

@@ -96,20 +96,21 @@ def test_boost_changes_order_vs_plain(eng):
     assert boosted != plain
 
 
-def test_escalation_paths_are_exact(eng):
+@pytest.mark.parametrize("mode", ["AND", "OR"])
+def test_escalation_paths_are_exact(eng, mode):
     # overfetch=1 starts m at k+1, far below the stopword pair's match
     # count; shrinking max_candidates walks the loop through certificate
     # failure, the tail-slope jump, and the exact-path takeover — every
     # stop must land on the exact answer.
     exact = _rows(
-        eng.search_boosted(["the", "to"], "AND", 3, field_weights=ROLE_W)
+        eng.search_boosted(["the", "to"], mode, 3, field_weights=ROLE_W)
     )
     for max_candidates in (4, 8, 64, 256):
         scale = _rows(
             wand_boosted(
                 eng,
                 ["the", "to"],
-                "AND",
+                mode,
                 3,
                 field_weights=ROLE_W,
                 overfetch=1,
@@ -187,6 +188,9 @@ def _expected_batch(eng, fw=None, rec=None):
         # bound disabled — at least the stopword query must fail the
         # certificate and take its exact branch
         {"overfetch": 1, "exhaustive_df_cutoff": 1},
+        # escalation: the cap sits above m = k+1, so a failing query grows
+        # m in a further search_many round before it may fall back
+        {"overfetch": 1, "exhaustive_df_cutoff": 256},
     ],
 )
 def test_batch_boosted_matches_exact_per_query(eng, kwargs):
