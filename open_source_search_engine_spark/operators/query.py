@@ -8,25 +8,40 @@ score-desc / docid-asc tie-break (`Msg3a.cpp:807-811`).
 
 Spark-first re-expression -- two code paths sharing one formula module:
 
-* ``exact`` path: decode the query terms' blocks (partition-pruned scan on
-  term_id), compute per-(term, doc) contributions JVM-side, aggregate with a
-  CANONICAL accumulation order (contributions sorted by term string inside an
-  ``aggregate(array_sort(collect_list(...)))`` expression -- float64 sums are
-  bit-stable across partitionings, SURVEY.md §7.4.1), then
-  ``ORDER BY score DESC, doc_id ASC LIMIT k`` which Spark executes as
-  TakeOrderedAndProject = partial per-partition top-k + final merge, exactly
-  the reference's TopTree -> Msg3a shape (SURVEY.md A9/T1/T2).
+* ``exact`` path: one plan lookup resolves the include and ``-term``
+  exclude terms together; one partition-pruned scan on term_id decodes the
+  blocks of both; per-(term, doc) contributions are computed JVM-side with
+  each term's idf as a literal; ONE pivoted aggregation per doc sums them in
+  a CANONICAL order (one conditional-sum column per term, folded in term-
+  string-ascending order -- float64 sums are bit-stable across
+  partitionings, SURVEY.md §7.4.1) and carries the exclusion flag
+  ``max(term_id IN excluded)``; then ``ORDER BY score DESC, doc_id ASC
+  LIMIT k`` runs as TakeOrderedAndProject = partial per-partition top-k +
+  final merge, exactly the reference's TopTree -> Msg3a shape (SURVEY.md
+  A9/T1/T2).
+
+  Two routes, picked in ONE place (``decoded_postings``) from the planned
+  decode volume sum(df), which the driver already holds in its plan cache:
+  at or below ``SINGLE_TASK_MAX_POSTINGS`` the scan is coalesced to one
+  partition before the Arrow decode, so the query is ONE Spark job with ONE
+  Python task and no Exchange (the aggregate's child is a single
+  partition) -- the shape of one shard reading its termlists in a single
+  pass. Above it, when a term id has no cached df, or for a positional
+  decode (phrase, proximity: not yet measured), each postings file decodes
+  in its own task and the aggregate shuffles on doc_id -- the route that
+  scales out. Both routes give identical rows and float64
+  scores (gated in tests/test_exact_routes.py).
 
 * ``wand`` path (block-max pruning): see wand.py. Selects with upper bounds,
   scores with the same canonical formula, so results are identical.
 
 AND semantics = doc must match every term group (`PosdbTable.cpp:2049`);
-OR = any term; NOT (-term) = anti-join (`Query.h:191-193`).
+OR = any term; NOT (-term) = the exclusion flag above (`Query.h:191-193`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
 import numpy as np
@@ -54,6 +69,39 @@ DECODED_POS_SCHEMA = T.StructType(
     DECODED_SCHEMA.fields
     + [T.StructField("positions", T.ArrayType(T.IntegerType()), False)]
 )
+
+#: Largest planned decode volume (sum of df over the scanned term ids) that
+#: decoded_postings serves with ONE Python task (unpositioned decodes only).
+#: A Python task adds about 0.2 s to a job before the decode body runs, so
+#: below this volume one task beats a task per postings-file split; the
+#: value is the measured crossover on 4 cores (BENCH.md, "One-task exact
+#: route"; re-measure with scripts/route_crossover.py).
+SINGLE_TASK_MAX_POSTINGS = 900_000
+
+
+class UnsupportedPatternError(ValueError):
+    """A starred query word the dictionary expander cannot serve: a
+    negated wildcard (``-pre*``), or an infix or multi-star pattern
+    (``*mid*``, ``a*b``). Only one leading (``*fix``) or one trailing
+    (``pre*``) star on an unsigned word expands."""
+
+    def __init__(self, pattern: str):
+        super().__init__(
+            f"unsupported wildcard pattern {pattern!r}: only a single "
+            "leading ('*fix') or trailing ('pre*') star on an unsigned "
+            "word expands"
+        )
+        self.pattern = pattern
+
+
+def _check_wildcard(word: str) -> None:
+    """Raise UnsupportedPatternError for a starred query-string word that
+    is not an unsigned ``pre*`` or ``*fix`` with a non-empty stem."""
+    if "*" not in word:
+        return
+    stem = word[1:] if word.startswith("*") else word[:-1]
+    if word.startswith("-") or not stem or "*" in stem:
+        raise UnsupportedPatternError(word)
 
 
 @dataclass
@@ -248,6 +296,9 @@ class SearchEngine:
         #: term -> (term_id, df, max_salt_bits) | None for confirmed-absent
         #: (the g_termFreqCache analog, `Posdb.cpp:306`; snapshot-bound)
         self._plan_cache: dict[str, tuple | None] = {}
+        #: term_id -> df of every cached plan hit: decoded_postings sizes
+        #: its route from it without a job
+        self._df_of_tid: dict[int, int] = {}
         #: phrase string -> (persisted hits frame, df); bounded FIFO so a
         #: long-lived serving engine answering many expanded queries with
         #: n>=3-word phrase members never accumulates unbounded cached
@@ -347,6 +398,7 @@ class SearchEngine:
                     int(r.term_id), int(r.df),
                     int(r.max_salt_bits), int(r.min_salt_bits),
                 )
+                self._df_of_tid[int(r.term_id)] = int(r.df)
             for t in missing:
                 self._plan_cache.setdefault(t, None)  # confirmed absent
         hits = [
@@ -371,11 +423,28 @@ class SearchEngine:
         self, term_ids: list[int], include_positions: bool = False
     ) -> DataFrame:
         """Partition-pruned scan of the query terms' blocks, decoded back to
-        (term_id, doc_id, tf, dl[, positions]) rows via an Arrow UDF."""
+        (term_id, doc_id, tf, dl[, positions]) rows via an Arrow UDF.
+
+        The one place the exact route is chosen: for an unpositioned decode
+        whose term ids all have a cached df summing to at most
+        ``SINGLE_TASK_MAX_POSTINGS``, the scan is coalesced to one
+        partition, so the decode is one Python task and every consumer that
+        groups by doc_id plans no Exchange. Positional decodes (phrase,
+        proximity, near), term ids without a cached df (e.g. the bare engine
+        of hot_cache.build_hot_term_cache) and larger plans decode one task
+        per postings file: the crossover was measured on the unpositioned
+        decode only."""
         cols = ["term_id", "seg_seq", "doc_ids", "tfs", "dls"] + (
             ["positions"] if include_positions else []
         )
         blocks = self._postings.filter(F.col("term_id").isin(term_ids)).select(*cols)
+        df_of = getattr(self, "_df_of_tid", {})
+        if (
+            not include_positions
+            and all(t in df_of for t in term_ids)
+            and sum(df_of[t] for t in term_ids) <= SINGLE_TASK_MAX_POSTINGS
+        ):
+            blocks = blocks.coalesce(1)
         schema = DECODED_POS_SCHEMA if include_positions else DECODED_SCHEMA
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -431,29 +500,36 @@ class SearchEngine:
         keeping global statistics -- the reference's site-whitelist shape
         (`Msg2.h:13-14`, SURVEY.md F6/F7). The semi-join applies BEFORE
         scoring, so the plan never ranks unrestricted results.
+
+        One plan lookup resolves the include and exclude terms; one scan
+        decodes both, and ``-term`` exclusions are a flag of the same
+        per-doc aggregation (a doc with any excluded term drops out). The
+        scan's route -- one Python task and no Exchange at or below
+        ``SINGLE_TASK_MAX_POSTINGS`` planned postings, a task per postings
+        file and a doc_id shuffle above it -- is picked by
+        decoded_postings; rows and scores are the same either way.
         """
-        plan = self.plan_terms(query_terms)
-        n_q = len(set(query_terms))
-        if plan.empty or (mode == "AND" and len(plan) < n_q):
+        include = set(query_terms)
+        exclude = set(exclude_terms or ())
+        plan = self.plan_terms(sorted(include | exclude) if include else [])
+        inc = plan[plan["term"].isin(include)]
+        if inc.empty or (mode == "AND" and len(inc) < len(include)):
             # a required term is absent from the corpus -> empty result
             return self.spark.createDataFrame(
                 [], "doc_id long, score double, matched int"
             )
-        contrib = self._contributions(plan)
+        ex_ids = [
+            int(t) for t, term in zip(plan["term_id"], plan["term"])
+            if term in exclude
+        ]
+        contrib = self._contributions(inc, ex_ids)
         if filter_docs is not None:
             contrib = contrib.join(
                 filter_docs.select("doc_id"), "doc_id", "left_semi"
             )
-        scored = self._aggregate_scores(contrib, list(plan["term"]))
+        scored = self._aggregate_scores(contrib, list(inc["term"]))
         if mode == "AND":
-            scored = scored.filter(F.col("matched") == len(plan))
-        if exclude_terms:
-            ex_plan = self.plan_terms(exclude_terms)
-            if not ex_plan.empty:
-                ex_docs = self.decoded_postings(
-                    [int(t) for t in ex_plan["term_id"]]
-                ).select("doc_id").distinct()
-                scored = scored.join(ex_docs, "doc_id", "left_anti")
+            scored = scored.filter(F.col("matched") == len(inc))
         return scored
 
     def search_terms(
@@ -468,6 +544,13 @@ class SearchEngine:
         ordered score desc / doc_id asc, limited to k (Spark executes this
         as TakeOrderedAndProject: per-partition partial top-k + tiny final
         merge, the TopTree -> Msg3a shape).
+
+        Routes as score_terms: a query whose planned postings (sum of df
+        over include and exclude terms) are at most
+        ``SINGLE_TASK_MAX_POSTINGS`` runs as ONE Spark job with one Python
+        task and no Exchange (plus one term_stats lookup job when a term is
+        not yet in the plan cache); a larger plan decodes a task per
+        postings file and shuffles the aggregate on doc_id.
 
         Unrestricted single-term queries on precomputed hot terms answer
         from the shortcut cache (hot_cache.py) -- bit-identical results,
@@ -1541,9 +1624,14 @@ class SearchEngine:
         leading or trailing ``*`` routes the whole query through
         search_wildcard, where each pattern expands in the (reversed)
         dictionary and scores as a vote group; signs compose (r5 s7).
+        Any other starred word -- a negated wildcard (``-pre*``), an infix
+        or multi-star pattern (``*mid*``, ``a*b``) -- raises
+        UnsupportedPatternError instead of scoring as a literal token.
         For the FULL grammar (quotes, parens, OR, field:value) use
         search_query."""
         raw = query.split()
+        for w in raw:
+            _check_wildcard(w)
         has_wild = any(
             not w.startswith("-")
             and (w.startswith("*") or w.endswith("*"))
@@ -2236,8 +2324,9 @@ class SearchEngine:
     ) -> dict[str, list[tuple[str, float]]]:
         """Shared wildcard expander: trailing ``pre*`` probes the term
         dictionary (pushed-down StartsWith), leading ``*fix`` probes the
-        reversed dictionary (`_reversed_dict`); anything else is a
-        literal single-member group. Expansion order is (df DESC, term
+        reversed dictionary (`_reversed_dict`); any other starred pattern
+        raises UnsupportedPatternError; a star-free word is a literal
+        single-member group. Expansion order is (df DESC, term
         ASC), bounded by ``max_expansions`` per pattern."""
         groups: dict[str, list[tuple[str, float]]] = {}
         for pat in sorted(set(patterns)):
@@ -2265,6 +2354,8 @@ class SearchEngine:
                     .collect()
                 )
                 groups[pat] = [(r["term"], 1.0) for r in rows]
+            elif "*" in pat:
+                raise UnsupportedPatternError(pat)
             else:
                 groups[pat] = [(pat, 1.0)]
         return groups
@@ -2375,7 +2466,11 @@ class SearchEngine:
                 [(v, int(n)) for v, n in dlt.items()], "_fv string, _dlt int"
             )
         )
-        dl_side = docs_aux.join(dlt_df, "_fv").select(
+        # null-safe: a doc whose field is NULL still gets its dl-tilde
+        # (the dictionary's None entry, dl_field 0) and scores on its body
+        dl_side = docs_aux.join(
+            dlt_df, docs_aux["_fv"].eqNullSafe(dlt_df["_fv"])
+        ).select(
             "doc_id",
             (F.col("_dlb") + F.lit(w) * F.col("_dlt")).alias("_dlf"),
         )
@@ -3157,25 +3252,37 @@ class SearchEngine:
         return self.phrase_docs(words, restrict=restrict)
 
     # ------------------------------------------------------------------
-    def _contributions(self, plan: pd.DataFrame) -> DataFrame:
-        """(term, doc_id, contrib) with contrib = idf * tf_norm, JVM-side."""
+    def _contributions(
+        self, plan: pd.DataFrame, exclude_ids: Sequence[int] = ()
+    ) -> DataFrame:
+        """(doc_id, term, contrib) with contrib = idf * tf_norm, JVM-side.
+        Each planned term's name and idf enter as literals keyed on
+        term_id, so no side table is built or joined.
+
+        ``exclude_ids`` decode in the same scan and add an ``excluded``
+        flag column (consumed by _aggregate_scores); their rows carry a
+        null term and contrib unless the term is also planned."""
         term_ids = [int(t) for t in plan["term_id"]]
-        decoded = self.decoded_postings(term_ids)
-        meta = self.spark.createDataFrame(
-            plan[["term_id", "term", "idf"]]
-        )
+        decoded = self.decoded_postings(sorted(set(term_ids) | set(exclude_ids)))
+        tid = F.col("term_id")
+        names, idfs = list(plan["term"]), [float(v) for v in plan["idf"]]
+        term = F.when(tid == term_ids[0], F.lit(names[0]))
+        idf = F.when(tid == term_ids[0], F.lit(idfs[0]))
+        for t, name, v in zip(term_ids[1:], names[1:], idfs[1:]):
+            term = term.when(tid == t, F.lit(name))
+            idf = idf.when(tid == t, F.lit(v))
         k1, b = self.params.k1, self.params.b
         from .hot_cache import tf_norm_col
 
-        return (
-            decoded.join(F.broadcast(meta), "term_id")
-            .withColumn(
-                "contrib",
-                F.col("idf")
-                * tf_norm_col(F.col("tf"), F.col("dl"), k1, b, self.avgdl),
-            )
-            .select("doc_id", "term", "contrib")
-        )
+        cols = [
+            "doc_id",
+            term.alias("term"),
+            (idf * tf_norm_col(F.col("tf"), F.col("dl"), k1, b, self.avgdl))
+            .alias("contrib"),
+        ]
+        if exclude_ids:
+            cols.append(tid.isin(list(exclude_ids)).alias("excluded"))
+        return decoded.select(*cols)
 
     # ------------------------------------------------------------------
     def phrase_docs(
@@ -3319,39 +3426,31 @@ class SearchEngine:
             out = out.unionByName(f)
         return out.distinct()
 
-    def _aggregate_scores(
-        self, contrib: DataFrame, terms: list[str] | None = None
-    ) -> DataFrame:
+    def _aggregate_scores(self, contrib: DataFrame, terms: list[str]) -> DataFrame:
         """Canonical-order float64 sum per doc: contributions added in term-
         string-ascending order (bit-stable across partitionings).
 
-        With the query's term list known (always, in practice) this is a
-        PIVOTED hash aggregation -- one conditional-sum column per term,
-        then a fixed-order fold -- which map-side partial-aggregates and is
-        ~10x cheaper at scale than the collect_list+array_sort fold (kept as
-        the fallback). The add sequence is identical: 0.0 + c_t1 + c_t2 ...
-        skipping absent terms, terms sorted ascending."""
-        if terms:
-            ts = sorted(set(terms))
-            aggs = [
-                F.sum(F.when(F.col("term") == t, F.col("contrib"))).alias(
-                    f"_c{i}"
-                )
-                for i, t in enumerate(ts)
-            ]
-            g = contrib.groupBy("doc_id").agg(
-                *aggs, F.count(F.lit(1)).cast("int").alias("matched")
-            )
-            # linear fold (see _vote_group_scores): when/otherwise
-            # doubles the tree per term
-            score = F.lit(0.0)
-            for i in range(len(ts)):
-                score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-            return g.select("doc_id", score.alias("score"), "matched")
-        return contrib.groupBy("doc_id").agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(term, contrib))), "
-                "cast(0.0 as double), (acc, x) -> acc + x.contrib)"
-            ).alias("score"),
-            F.count(F.lit(1)).cast("int").alias("matched"),
-        )
+        A PIVOTED hash aggregation -- one conditional-sum column per term,
+        then a fixed-order fold -- which map-side partial-aggregates. The
+        add sequence is 0.0 + c_t1 + c_t2 ... skipping absent terms, terms
+        sorted ascending. ``matched`` counts the doc's rows with a term;
+        when ``contrib`` carries an ``excluded`` flag (see _contributions)
+        a doc with any flagged row is dropped in the same aggregation."""
+        ts = sorted(set(terms))
+        aggs = [
+            F.sum(F.when(F.col("term") == t, F.col("contrib"))).alias(f"_c{i}")
+            for i, t in enumerate(ts)
+        ]
+        aggs.append(F.count("term").cast("int").alias("matched"))
+        excluded = "excluded" in contrib.columns
+        if excluded:
+            aggs.append(F.max("excluded").alias("_ex"))
+        g = contrib.groupBy("doc_id").agg(*aggs)
+        if excluded:
+            g = g.filter(~F.col("_ex"))
+        # linear fold (see _vote_group_scores): when/otherwise
+        # doubles the tree per term
+        score = F.lit(0.0)
+        for i in range(len(ts)):
+            score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
+        return g.select("doc_id", score.alias("score"), "matched")

@@ -157,7 +157,7 @@ def _make_scorer(
     blocks' rows to the group's doc-hash range, annihilate the group's
     tombstones, build the doc universe (intersection for AND, union for
     OR), accumulate per-term contributions in term-string-ascending order
-    (same float64 add sequence as the exact path's array_sort fold)."""
+    (same float64 add sequence as the exact path's pivoted fold)."""
 
     def score_group(
         key, pdf: pd.DataFrame, tomb_pdf: pd.DataFrame | None
@@ -256,7 +256,7 @@ def _make_scorer(
         if universe is None or universe.size == 0:
             return empty
         # accumulation below walks subs in TERM-STRING order (float64 add
-        # sequence identical to the exact path's array_sort fold)
+        # sequence identical to the exact path's pivoted fold)
         subs.sort(key=lambda s: s[0])
         acc = np.zeros(universe.size, dtype=np.float64)
         matched = np.zeros(universe.size, dtype=np.int32)

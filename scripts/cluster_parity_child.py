@@ -2,8 +2,9 @@
 """Child process for the multi-JVM parity gate.
 
 Builds the inverted index from a pre-materialized transcript parquet on the
-given Spark master and prints the fixed query battery's results as one JSON
-line (``PARITY_RESULT {...}``). The parity test runs this under
+given Spark master and prints the fixed query battery's results, on the
+exact path's one-task route and again (key ``split``) on its split route, as
+one JSON line (``PARITY_RESULT {...}``). The parity test runs this under
 ``local-cluster[2,1,...]`` — two SEPARATE executor JVMs with real netty
 shuffle, the closest this sandbox gets to a multi-node cluster — and diffs
 the battery bit-for-bit against the in-process ``local[4]`` session's
@@ -79,14 +80,26 @@ def build_and_run(spark, corpus_dir: str, warehouse: str) -> dict:
         build_index,
         transcripts_to_docs,
     )
-    from open_source_search_engine_spark.operators.query import SearchEngine
+    from open_source_search_engine_spark.operators import query
 
     cat = Catalog(spark, warehouse)
     tr = spark.read.parquet(corpus_dir)
     build_index(
         spark, cat, transcripts_to_docs(tr), IndexConfig(tokenizer_mode="ascii")
     )
-    return run_battery(SearchEngine(spark, cat, tokenizer_mode="ascii"))
+    out = run_battery(query.SearchEngine(spark, cat, tokenizer_mode="ascii"))
+    # the battery's small plans take the one-task exact route; run it again
+    # on the split route (a decode task per postings file, doc_id shuffle
+    # across the executors) so both routes are diffed across JVMs
+    limit = query.SINGLE_TASK_MAX_POSTINGS
+    query.SINGLE_TASK_MAX_POSTINGS = 0
+    try:
+        out["split"] = run_battery(
+            query.SearchEngine(spark, cat, tokenizer_mode="ascii")
+        )
+    finally:
+        query.SINGLE_TASK_MAX_POSTINGS = limit
+    return out
 
 
 def main() -> None:

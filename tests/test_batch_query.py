@@ -10,6 +10,7 @@ from open_source_search_engine_spark.operators.index_build import (
     build_index,
     transcripts_to_docs,
 )
+from open_source_search_engine_spark.operators import query as query_mod
 from open_source_search_engine_spark.operators.query import SearchEngine
 from open_source_search_engine_spark.sources.transcripts import synth_transcripts
 
@@ -46,6 +47,13 @@ def test_batch_matches_single_queries(spark, eng):
         ]
         got = by_q.get(q["query_id"], [])
         assert got == single, q["query_id"]
+
+
+def test_batch_matches_single_queries_split_route(spark, eng, monkeypatch):
+    # the same gate with every decode on the exact path's split route (a
+    # task per postings file, doc_id shuffle), the route large plans take
+    monkeypatch.setattr(query_mod, "SINGLE_TASK_MAX_POSTINGS", 0)
+    test_batch_matches_single_queries(spark, eng)
 
 
 def test_batch_routing_invariant(eng):

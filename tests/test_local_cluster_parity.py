@@ -7,7 +7,10 @@ rebuilding the same corpus under ``local-cluster[2,1,...]`` — two
 SEPARATE executor JVMs with real netty shuffle and driver/executor
 closure shipping — in a child process, and diffing the fixed query
 battery bit-for-bit (doc_ids, float64 scores, matched counts) against
-the in-process ``local[4]`` session's results on the identical corpus.
+the in-process ``local[4]`` session's results on the identical corpus --
+once on the exact path's one-task route and once on its split route (a
+decode task per postings file and a doc_id shuffle, the route large plans
+take), so the cross-executor shuffle stays covered.
 
 Failures this would catch that no local[N] test can: driver-local state
 consulted from executors, lambda/Arrow serialization differences across
@@ -56,6 +59,11 @@ def test_local_cluster_battery_bit_identical(
     # r5 session-6 paths all matched something to diff
     for key in ("relaxed", "fuzzy", "prf", "ltr"):
         assert expected[key], f"battery entry {key} is empty"
+    # the exact path's two routes agree in one JVM before either is
+    # diffed across JVMs
+    assert expected["split"] == {
+        k: v for k, v in expected.items() if k != "split"
+    }
 
     wh_cluster = str(tmp_path_factory.mktemp("parity-wh-cluster"))
     env = dict(os.environ)

@@ -11,6 +11,7 @@ from open_source_search_engine_spark.operators.index_build import (
     build_index,
     transcripts_to_docs,
 )
+from open_source_search_engine_spark.operators import query as query_mod
 from open_source_search_engine_spark.operators.query import SearchEngine
 from open_source_search_engine_spark.operators.wand import (
     pruning_stats,
@@ -83,6 +84,13 @@ def test_wand_with_exclusion(eng):
     ).collect()
     wand = wand_search(eng, ["spark"], "AND", 10, exclude_terms=["index"]).collect()
     assert [r["doc_id"] for r in wand] == [r["doc_id"] for r in exact]
+
+
+def test_wand_with_exclusion_split_route(eng, monkeypatch):
+    # exclusions decode on the exact path's split route (a task per
+    # postings file, doc_id shuffle), the route large plans take
+    monkeypatch.setattr(query_mod, "SINGLE_TASK_MAX_POSTINGS", 0)
+    test_wand_with_exclusion(eng)
 
 
 def test_wand_small_phase_a(eng):

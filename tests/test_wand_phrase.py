@@ -22,6 +22,7 @@ from open_source_search_engine_spark.operators.index_build import (
     build_index,
     transcripts_to_docs,
 )
+from open_source_search_engine_spark.operators import query as query_mod
 from open_source_search_engine_spark.operators.query import SearchEngine
 from open_source_search_engine_spark.operators.wand import (
     wand_phrase,
@@ -69,6 +70,14 @@ def test_wand_phrase_matches_exact(eng, phrase, k):
     for (sd, ss, sm), (ed, es, em) in zip(scale, exact):
         assert ss == pytest.approx(es, rel=1e-12, abs=1e-12), (sd, ss, es)
         assert sm == em
+
+
+@pytest.mark.parametrize("phrase,k", PHRASE_TIERS)
+def test_wand_phrase_matches_exact_split_route(eng, monkeypatch, phrase, k):
+    # every decode on the exact path's split route (a task per postings
+    # file, doc_id shuffle), the route large plans take
+    monkeypatch.setattr(query_mod, "SINGLE_TASK_MAX_POSTINGS", 0)
+    test_wand_phrase_matches_exact(eng, phrase, k)
 
 
 @pytest.mark.parametrize("phrase,k", PHRASE_TIERS[:3])
